@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JDecimal, JDouble, JInt, JLong, JNothing, JObject, JString, JValue, jvalue2monadic}
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Session warmup (codegen, parquet footer listing,
@@ -40,33 +42,47 @@ object Bench {
       (if (bimodal) medSum else minSum) / refs.values.sum)
   }
 
+  /** A bench record parsed as JSON; `JNothing` when the text is not JSON,
+    * so a malformed record reads as one without `sf` or gates.
+    */
+  private def parseRecord(json: String): JValue =
+    JsonMethods.parseOpt(json).getOrElse(JNothing)
+
+  private def numberOf(v: JValue): Option[Double] = v match {
+    case JDouble(d) => Some(d)
+    case JDecimal(d) => Some(d.toDouble)
+    case JLong(l) => Some(l.toDouble)
+    case JInt(i) => Some(i.toDouble)
+    case _ => None
+  }
+
   /** True iff `prevJson` RECORDS a scale factor and it is `sfDir` (modulo a
     * trailing slash, nothing looser) — pure so a spec can pin that a record
     * MISSING the sf field is never compared (ADVICE r15: the old forall
     * treated "no sf" as "any sf").
     */
   def sfMatches(prevJson: String, sfDir: String): Boolean =
-    raw""""sf":"([^"]+)"""".r.findFirstMatchIn(prevJson)
-      .exists(_.group(1).stripSuffix("/") == sfDir.stripSuffix("/"))
+    parseRecord(prevJson) \ "sf" match {
+      case JString(sf) => sf.stripSuffix("/") == sfDir.stripSuffix("/")
+      case _ => false
+    }
 
-  /** The previous record's per-gate raw times plus its anchor ratio,
-    * parsed from the JSON text — the shared substrate of the tripwire
-    * and the round-over-round median. Exponent-aware number pattern
-    * (ADVICE r15): a plain [0-9.]+ reads 8.5E-4 as 8.5 — and
-    * sub-millisecond gate times DO serialize in scientific notation, so
-    * the tripwire would baseline ×10000 high.
+  /** The previous record's per-gate raw times plus its anchor ratio
+    * (1.0 when absent) — the shared substrate of the tripwire and the
+    * round-over-round median. Numbers go through the JSON parser, so
+    * sub-millisecond times serialized in scientific notation (8.5E-4)
+    * read at their true value.
     */
   private[graft] def prevGateEntries(prevJson: String)
       : (Double, Seq[(String, Double)]) = {
-    val num = raw"-?[0-9.]+(?:[eE][-+]?[0-9]+)?"
-    val prevRatio = raw""""anchor_ratio":($num)""".r
-      .findFirstMatchIn(prevJson).map(_.group(1).toDouble).getOrElse(1.0)
-    val qBlock = prevJson.indexOf("\"queries\":{")
-    if (qBlock < 0) return (prevRatio, Nil)
-    val inner = prevJson.substring(qBlock + "\"queries\":{".length,
-      prevJson.indexOf("}", qBlock))
-    (prevRatio, raw""""([a-zA-Z0-9_]+)":($num)""".r.findAllMatchIn(inner)
-      .map(m => (m.group(1), m.group(2).toDouble)).toSeq)
+    val rec = parseRecord(prevJson)
+    val prevRatio = numberOf(rec \ "anchor_ratio").getOrElse(1.0)
+    val entries = rec \ "queries" match {
+      case JObject(fields) =>
+        fields.flatMap { case (name, v) => numberOf(v).map(name -> _) }
+      case _ => Nil
+    }
+    (prevRatio, entries)
   }
 
   /** Per-gate regression tripwire against a previous record's JSON text —
@@ -301,7 +317,7 @@ object Bench {
     // driver box, so offset/commit/state fsyncs measure it, not the stream.
     // Session-conf (not per-gate) because it is measurement placement, not
     // query logic; a production stream always sets an explicit DURABLE
-    // location and never hits this default. r18 A/B (ProbeR18 ckpt):
+    // location and never hits this default. r18 A/B (OPTIMIZATION_r18.md):
     // 5/6 gates faster on medians, total 0.97×.
     val benchCkptRoot = graft.queries.GateTmp.dir("graft_bench_ckpt")
     spark.conf.set("spark.sql.streaming.checkpointLocation",

@@ -100,7 +100,7 @@ object Dedup {
       // a column-less repartition locally SORTS every partition first
       // (Spark's retry-determinism rule, sortBeforeRepartition) — on text
       // rows that sort cost the MinHash gates 26-58% at sf0.1 (probed
-      // round 10, tools/MinhashProbe) while buying nothing; hashing a
+      // round 10, README round record) while buying nothing; hashing a
       // unique id distributes identically without touching row order
       df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, by)
     else df
@@ -175,7 +175,7 @@ object Dedup {
       }
     // the shingle+hash expression is the compute-heavy per-row stage —
     // spread it across the session parallelism (no-op at corpus scale).
-    // Measured trade (r10, tools/MinhashProbe at sf0.1, hash-partitioned
+    // Measured trade (r10 at sf0.1, README round record, hash-partitioned
     // spread): q55 1.00× on/off — the shuffle pays for itself exactly;
     // the incremental paths (q115 1.15×, q119 1.24×) pay it twice (batch
     // AND corpus side) ahead of persist, a ~0.2 s sf0.1-only overhead
@@ -1072,7 +1072,7 @@ object Dedup {
       keyed0.queryExecution.optimizedPlan.stats.sizeInBytes <= saltCap
     val salt = if (saltFactor > 0) saltFactor
       else if (measuredSmall) 1 else 8
-    // observability, the wcoj.lastRoute pattern
+    // observability, the sim.lastRoute pattern
     df.sparkSession.conf.set("graft.dedup.lastSaltFactor", salt.toString)
     // block-size cap: one windowed count per block (a single shuffle on
     // the block key — the aggregate+semi-join twin pays that shuffle twice)

@@ -24,7 +24,7 @@ private[operators] object Skew {
     */
   val SaltBytesKey = "graft.skew.saltBytes"
 
-  /** Observability (the wcoj/sim lastRoute pattern): the salt factor the
+  /** Observability (the sim.lastRoute pattern): the salt factor the
     * last [[saltedJoin]] actually took — "1" (plain join) or "8".
     */
   val RouteKey = "graft.skew.lastSaltFactor"

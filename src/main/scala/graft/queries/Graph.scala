@@ -176,7 +176,7 @@ object Graph {
     // binary-join formulation, different physical algorithm.
     "q47_wcoj_triangle" -> ((s, d) => {
       val e = denseEdges(Tables(s, d))
-      graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+      graft.wcoj.WcojJoin.leapfrogHyperCube(s, Seq(
           (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
@@ -190,7 +190,7 @@ object Graph {
     // sf0.1; lazy iterator enumeration, no per-binding allocation).
     "q48_wcoj_4cycle" -> ((s, d) => {
       val e = mediumEdges(Tables(s, d))
-      graft.wcoj.WcojJoin.leapfrogCatalyst(s, Seq(
+      graft.wcoj.WcojJoin.leapfrogHyperCube(s, Seq(
           (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
           (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
           (e.select(col("src").as("c"), col("dst").as("e")), Seq("c", "e")),
@@ -222,33 +222,21 @@ object Graph {
     }),
 
     // the HyperCube-routed WCOJ under the hard gate: same dense triangle as
-    // q47, but with the broadcast budget forced to 0 so the complement
-    // relation CANNOT be collected — leapfrog's byte-budget check reroutes
-    // the whole join to the full Shares shuffle (leapfrogHyperCube). The
-    // route actually taken is emitted as a column, so a silent fall-back to
-    // the broadcast path hash-mismatches the oracle's 'hypercube' literal.
+    // q47, but on an explicit grid of defaultParallelism cells (a fixed
+    // grid: no budget growth, no single-cell collapse). The route is
+    // emitted as a column from the executed plan, so a silent fall-back to
+    // binary joins hash-mismatches the oracle's 'hypercube' literal.
     "q186_wcoj_hypercube" -> ((s, d) => {
-      val prev = s.conf.getOption("graft.wcoj.broadcastBudgetBytes")
-      try {
-        s.conf.set("graft.wcoj.broadcastBudgetBytes", "0")
-        val e = denseEdges(Tables(s, d))
-        // routing happens eagerly inside leapfrog (the complement is
-        // measured before any collect), so lastRoute is set on return
-        val tri = graft.wcoj.WcojJoin.leapfrog(s, Seq(
-            (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-            (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-            (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
-          Seq("a", "b", "c"))
-        val route = s.conf.get("graft.wcoj.lastRoute", "unset")
-        tri.filter(col("a") < col("b") && col("a") < col("c"))
-          .agg(count(lit(1)).as("n_triangles"))
-          .withColumn("route", lit(route))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("graft.wcoj.broadcastBudgetBytes", v)
-          case None => s.conf.unset("graft.wcoj.broadcastBudgetBytes")
-        }
-      }
+      val e = denseEdges(Tables(s, d))
+      val tri = graft.wcoj.WcojJoin.leapfrogHyperCube(s, Seq(
+          (e.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
+          (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
+          (e.select(col("dst").as("a"), col("src").as("c")), Seq("a", "c"))),
+        Seq("a", "b", "c"), maxCells = s.sparkContext.defaultParallelism)
+        .filter(col("a") < col("b") && col("a") < col("c"))
+        .agg(count(lit(1)).as("n_triangles"))
+      tri.withColumn("route",
+        lit(if (wcojRouteOf(tri) == "leapfrog") "hypercube" else "binary"))
     }),
 
     // directed 4-cycle count on the sparse graph — a cyclic query whose join

@@ -18,9 +18,9 @@ object Pipeline {
   /** [[graft.Tables.spreadScan]] over the documents table (see that scaladoc
     * for the scale rule): applied only to gates whose scan-stage text map —
     * tokenize / shingle / hash, serialized on the single-row-group bench
-    * file — measured as the hot phase in the r18 interleaved A/B probe
-    * (ProbeR18 spread/spread2); flat or negative gates keep the plain scan
-    * and are noted in OPTIMIZATION_r18.md.
+    * file — measured as the hot phase in the r18 interleaved A/B
+    * (OPTIMIZATION_r18.md); flat or negative gates keep the plain scan
+    * and are noted there.
     */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
     graft.Tables.spreadScan(Tables(s, d).documents, "doc_id")

@@ -628,7 +628,7 @@ object Relational {
 
     // the DIFFERENTIAL PK-FK gate: q218's star shape is one where
     // Catalyst's stats-free ReorderJoin happens to pick the same order as
-    // the PK-FK rule (the ProbeCbo finding), so it proves the rule runs,
+    // the PK-FK rule (the COVERAGE.md PK-FK finding), so it proves the rule runs,
     // not that it decides. This CHAIN is written smallest-first
     // (region → nation → supplier → lineitem) — an order stock Catalyst
     // KEEPS (each step already has a join condition) — while the rule must

@@ -18,12 +18,14 @@ import org.apache.spark.sql.types.LongType
   *
   * Children must each emit exactly their attribute list (Long columns,
   * ordered consistently with `attrOrder`); output is one row per binding of
-  * `attrOrder`.
+  * `attrOrder`. `maxCells > 0` caps the HyperCube grid at that many cells;
+  * 0 lets [[LeapFrogJoinExec]] size it.
   */
 final case class LeapFrogJoinPlan(
     children: Seq[LogicalPlan],
     childAttrs: Seq[Seq[String]],
     attrOrder: Seq[String],
+    maxCells: Int,
     override val output: Seq[Attribute]) extends LogicalPlan {
 
   // output attributes are constructor state, NOT recomputed per instance:
@@ -52,8 +54,8 @@ final case class LeapFrogJoinPlan(
 
 object LeapFrogJoinPlan {
   def create(children: Seq[LogicalPlan], childAttrs: Seq[Seq[String]],
-      attrOrder: Seq[String]): LeapFrogJoinPlan =
-    LeapFrogJoinPlan(children, childAttrs, attrOrder,
+      attrOrder: Seq[String], maxCells: Int): LeapFrogJoinPlan =
+    LeapFrogJoinPlan(children, childAttrs, attrOrder, maxCells,
       attrOrder.map(a => AttributeReference(a, LongType, nullable = false)()))
 }
 
@@ -110,12 +112,11 @@ final case class LeapFrogJoinExec(
     // hitter sketches), then memory-budgeted skew-aware share choice: the
     // grid grows past the parallelism floor whenever the estimated max cell
     // payload would outgrow the per-task byte budget. An explicit maxCells
-    // stays a hard user cap (fixed-grid behavior, as before).
-    val skewAware = session.conf.get("graft.wcoj.skewAware", "true").toBoolean
+    // stays a hard user cap (fixed-grid behavior, as before); otherwise the
+    // grid may grow to 4096 cells.
     val budget = session.conf.get("graft.wcoj.cellBudgetBytes", (64L << 20).toString).toLong
-    val capConf = session.conf.get("graft.wcoj.maxCellsCap", "4096").toInt
-    val stats = SkewStats.relStats(prepped, skewAware)
-    val cap = if (maxCells > 0) cells else math.max(cells, capConf)
+    val stats = SkewStats.relStats(prepped)
+    val cap = if (maxCells > 0) cells else math.max(cells, 4096)
     // measured-small single-cell route: when every relation together fits
     // comfortably in one task (default 4 MB of routed payload), a
     // parallelism-floor grid only buys scheduler overhead — free-attribute
@@ -281,9 +282,9 @@ final case class LeapFrogJoinExec(
 /** Planner strategy turning the logical node into the exec (SURVEY §7.5(b)). */
 object WcojStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p @ LeapFrogJoinPlan(children, childAttrs, attrOrder, _) =>
+    case p @ LeapFrogJoinPlan(children, childAttrs, attrOrder, maxCells, _) =>
       LeapFrogJoinExec(children.map(planLater), childAttrs, attrOrder,
-        maxCells = 0, p.output) :: Nil
+        maxCells, p.output) :: Nil
     case _ => Nil
   }
 }

@@ -2316,22 +2316,24 @@ class PmiBigramsSpec extends graft.SparkSpec {
     assert(!out.contains("rare"))
   }
 
-  test("shared-aggregate nBig equals the raw-occurrence count (r19, guide §2.4)") {
-    // nBig = Σ cxy over the unfiltered (w1, w2) aggregate ≡ the raw bigram
-    // occurrence count the old scalar branch re-scanned the corpus for —
-    // every output row (pmi included) must be bit-identical under both
+  test("nBig counts every bigram occurrence: hand-computed pmi") {
+    // doc 1: "hong kong" x6 then "the w1" .. "the w6" — 24 tokens, 23
+    // bigrams: (hong,kong) x6, (kong,hong) x5, (kong,the) x1 and 11 the/wi
+    // pairs. doc 2: 11 tokens, 10 bigrams: (hong,kong) x2, (kong,hong) x1,
+    // then kong-the, the-w1, w1-the, the-w2, w2-extra, extra-tokens,
+    // tokens-here. So nBig = 33 and nTok = 35; unigrams hong = kong = 8.
+    // Only (hong,kong) = 8 and (kong,hong) = 6 reach minCount 3:
+    //   pmi(hong,kong) = ln((8/33) / (8/35)^2) = ln(9800/2112) = 1.53475
+    //   pmi(kong,hong) = ln((6/33) / (8/35)^2) = ln(7350/2112) = 1.24706
     val docs = Seq(
       (1L, (Seq.fill(6)("hong kong") ++ (1 to 6)
         .flatMap(i => Seq("the", s"w$i"))).mkString(" ")),
       (2L, "hong kong hong kong the w1 the w2 extra tokens here"))
       .toDF("id", "text")
-    def run(): Set[(Long, String, String, Long, Double)] =
-      Scoring.pmiBigrams(docs, "text", minCount = 3, topK = 10)
-        .as[(Long, String, String, Long, Double)].collect().toSet
-    val shared = run()
-    spark.conf.set("graft.pmi.sharedNBig", "false")
-    val raw = try run() finally spark.conf.unset("graft.pmi.sharedNBig")
-    assert(shared === raw)
-    assert(shared.nonEmpty)
+    val out = Scoring.pmiBigrams(docs, "text", minCount = 3, topK = 10)
+      .as[(Long, String, String, Long, Double)].collect().toSeq.sortBy(_._1)
+    assert(out === Seq(
+      (1L, "hong", "kong", 8L, 1.5347),
+      (2L, "kong", "hong", 6L, 1.2471)))
   }
 }

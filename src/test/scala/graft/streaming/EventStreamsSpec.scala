@@ -370,7 +370,7 @@ class EventStreamsSpec extends SparkSpec {
         .as[(Timestamp, Long, Double)].collect().toSet
     // the route is the array Aggregator at EVERY p (O(1) register update
     // per row vs the column form's O(2^p) conditional maxes per row —
-    // measured 1.46× at p=6, 2.34× at p=8, ProbeHllForms); at p = 6 it
+    // measured 1.46× at p=6, 2.34× at p=8, README round record); at p = 6 it
     // must still coincide exactly with the column form (shared committed
     // oracle), which the bit-identity test below pins value-for-value
     val auto6 = rows(EventStreams.windowedDistinctHllAuto(df, "user_id", "1 hour", p = 6))

@@ -255,9 +255,7 @@ object ScaleCheck {
     // copy) have exactly factor × the base triangle count, so a
     // worst-case-optimal plan must grow near-linearly — a binary-join
     // plan's intermediate (all 2-paths) grows the same way here, but the
-    // check pins the LeapFrog node's own scaling and that the measured
-    // route (broadcast complement vs HyperCube) flips on the byte budget,
-    // not on luck.
+    // check pins the LeapFrog node's own scaling and the grid it sized.
     {
       val base = graft.Tables(spark, sfDir).orders
         .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
@@ -269,15 +267,15 @@ object ScaleCheck {
               (col("dst") + col("__rep") * 1000L).as("dst")))
           .localCheckpoint(true)
         val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrog(spark,
+        val n = graft.wcoj.WcojJoin.leapfrogHyperCube(spark,
           Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
             (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
             (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
           Seq("a", "b", "c")).count()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_triangle          x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs cells=" +
+          spark.conf.get("graft.wcoj.lastCells", "?"))
       }
     }
 
@@ -300,13 +298,13 @@ object ScaleCheck {
         def r(n1: String, n2: String) =
           (edges.select(col("src").as(n1), col("dst").as(n2)), Seq(n1, n2))
         val t0 = System.nanoTime()
-        val clique = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val clique = graft.wcoj.WcojJoin.leapfrogHyperCube(spark,
           Seq(r("a", "b"), r("b", "c"), r("c", "d"), r("d", "a"), r("b", "d"), r("a", "c")),
           Seq("a", "b", "c", "d"))
         val n = clique.count()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_4clique           x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=catalyst")
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs")
       }
     }
 
@@ -334,149 +332,14 @@ object ScaleCheck {
           (edges.select(col("src").as(n1), col("dst").as(n2)), Seq(n1, n2))
         val t0 = System.nanoTime()
         // S7: a-b,b-c,c-d,d-e,a-e,a-c,b-d,c-e (subgraphQuery.scala:49-51)
-        val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark,
+        val n = graft.wcoj.WcojJoin.leapfrogHyperCube(spark,
           Seq(r("a", "b"), r("b", "c"), r("c", "d"), r("d", "e"),
             r("a", "e"), r("a", "c"), r("b", "d"), r("c", "e")),
           Seq("a", "b", "c", "d", "e")).count()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[scale] wcoj_s7_5vertex        x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=catalyst")
+          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs")
       }
-    }
-
-    // skew-guard TAX on clean inputs: the same triangle join, guard on vs
-    // off (min-of-3, alternated order), at the DEFAULT 64 MB cell budget
-    // on unskewed data — the guard must not flip (route stays broadcast)
-    // and its cost must stay a small fraction of the join. Since r13 the
-    // Misra-Gries sketch rides the routing shuffle's map side as an
-    // accumulator instead of a dedicated stats job: measured tax fell from
-    // +20% (extra-pass design) to ≤~3%, within run-to-run noise.
-    {
-      val base = graft.Tables(spark, sfDir).orders
-        .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      for (factor <- Seq(1, 10, 50)) {
-        val edges = (if (factor == 1) base
-          else base.crossJoin(spark.range(factor).select(col("id").as("__rep")))
-            .select((col("src") + col("__rep") * 1000L).as("src"),
-              (col("dst") + col("__rep") * 1000L).as("dst")))
-          .localCheckpoint(true)
-        def run(): Long = graft.wcoj.WcojJoin.leapfrog(spark,
-          Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-            (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-            (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
-          Seq("a", "b", "c")).count()
-        val nWarm = run()
-        var onSecs = Double.MaxValue; var offSecs = Double.MaxValue
-        for (i <- 1 to 3; on <- if (i % 2 == 0) Seq(true, false) else Seq(false, true)) {
-          spark.conf.set("graft.wcoj.skewGuard", on.toString)
-          val t0 = System.nanoTime(); val n = run()
-          require(n == nWarm, s"guard changed the answer: $n != $nWarm")
-          val s = (System.nanoTime() - t0) / 1e9
-          if (on) onSecs = math.min(onSecs, s) else offSecs = math.min(offSecs, s)
-        }
-        spark.conf.unset("graft.wcoj.skewGuard")
-        println(f"[scale] wcoj_guard_tax         x$factor%-3d " +
-          f"edges=${edges.count()}%8d out=$nWarm%9d on=$onSecs%6.2fs " +
-          f"off=$offSecs%6.2fs tax=${(onSecs / offSecs - 1) * 100}%+5.1f%% route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
-      }
-    }
-
-    // core+tail HYBRID route (r14): a triangle core on a dense synthetic
-    // digraph (50k nodes, deg 30 — the binary plan materializes the n·d²
-    // ≈ 45M-row path-2 intermediate where WCOJ is triangle-bounded) with
-    // two LARGE non-nullable tail relations scaled by the factor. Three
-    // routes compared min-of-2: the hybrid (core as ONE LeapFrog bag,
-    // tails as hash joins) must beat BOTH the r13 whole-query one-bag
-    // (which range-sorts every tail row into tries — its cost grows with
-    // the factor) and the pure binary GHD (which pays the path-2 cube, a
-    // constant core penalty). Measured r14: x10 hybrid 4.4s / onebag 8.9s
-    // / binary 5.9s; x50 hybrid 5.2s / onebag 34.8s / binary 6.9s.
-    {
-      val nodes = 50000L
-      val deg = 30
-      val edges = spark.range(nodes * deg)
-        .select((col("id") % nodes).as("src"),
-          pmod(hash((col("id") * 2654435761L).cast("long")).cast("long"), lit(nodes)).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint(true)
-      for (factor <- Seq(1, 10, 50)) {
-        val cdTail = spark.range(nodes * factor)
-          .select((col("id") % nodes).as("c"), col("id").as("d"))
-          .localCheckpoint(true)
-        val deTail = spark.range(nodes * factor * 2)
-          .select(shiftright(col("id"), 1).as("d"),
-            col("id").bitwiseAND(lit(1L)).as("e"))
-          .localCheckpoint(true)
-        def rels() = Seq(
-          (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-          (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-          (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")),
-          (cdTail, Seq("c", "d")), (deTail, Seq("d", "e")))
-        def run(wcoj: Boolean, hybrid: Boolean): (Long, Double) = {
-          spark.conf.set("graft.wcoj.hybridCore", hybrid.toString)
-          val t0 = System.nanoTime()
-          val n = graft.plans.MultiwayJoin.join(rels(), wcoj = wcoj)
-            .groupBy("a").agg(count(lit(1)).as("cnt")).count()
-          spark.conf.unset("graft.wcoj.hybridCore")
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        val arms = Seq("hybrid" -> (true, true), "onebag" -> (true, false),
-          "binary" -> (false, true))
-        val best = scala.collection.mutable.Map.empty[String, Double]
-        var out = -1L
-        for (i <- 1 to 2; (name, (w, h)) <- if (i % 2 == 0) arms.reverse else arms) {
-          val (n, s) = run(w, h)
-          require(out == -1L || n == out, s"route $name changed the answer")
-          out = n
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), s)
-        }
-        println(f"[scale] wcoj_coretail_hybrid   x$factor%-3d out=$out%9d " +
-          f"hybrid=${best("hybrid")}%6.2fs onebag=${best("onebag")}%6.2fs " +
-          f"binary=${best("binary")}%6.2fs")
-      }
-    }
-
-    // leading-attribute skew guard: a planted celebrity vertex (half of a
-    // replicated graph's edges re-sourced to one node) makes the raw
-    // leapfrog's single-attribute partitioning concentrate the whole hot
-    // enumeration in one task — the guard must FLIP the route to hypercube
-    // on the measured heavy-hitter mass, while the clean copy stays on the
-    // broadcast path. Run under an explicit 1 MB cell budget (the q186
-    // budget-pinning pattern): the flip condition is mass > budget, so a
-    // small budget demonstrates the same mechanism the 64 MB default
-    // applies at 64× the data.
-    {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (1L << 20).toString)
-      val base = graft.Tables(spark, sfDir).orders
-        .select((col("o_custkey") % 211).as("src"), (col("o_orderkey") % 211).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-        .crossJoin(spark.range(10).select(col("id").as("__rep")))
-        .select((col("src") + col("__rep") * 1000L).as("src"),
-          (col("dst") + col("__rep") * 1000L).as("dst"))
-      for (hot <- Seq(false, true)) {
-        // the hot copy UNIONS a 60k-neighbor star on vertex 0 (fresh dst id
-        // range, so every star edge is distinct and adds no triangle —
-        // same answer shape, but ~22% of the leading attribute's rows now
-        // hash to one task). Re-sourcing existing edges instead would
-        // collapse under distinct(): only 211×factor dst values exist.
-        val edges = (if (!hot) base
-          else base.unionByName(spark.range(60000).select(lit(0L).as("src"),
-            (col("id") + 1000000L).as("dst"))))
-          .localCheckpoint(true)
-        val t0 = System.nanoTime()
-        val n = graft.wcoj.WcojJoin.leapfrog(spark,
-          Seq((edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
-            (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
-            (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a"))),
-          Seq("a", "b", "c")).count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] wcoj_skew_guard        hot=$hot%-5s " +
-          f"edges=${edges.count()}%8d out=$n%9d time=$secs%7.2fs route=" +
-          spark.conf.get("graft.wcoj.lastRoute", "?"))
-      }
-      spark.conf.unset("graft.wcoj.cellBudgetBytes")
     }
 
     // small-input / LARGE-OUTPUT cyclic join (the r14 regression shape): a
@@ -500,7 +363,7 @@ object ScaleCheck {
           if (forceSingle)
             spark.conf.set("graft.wcoj.singleCellMaxBindings", Long.MaxValue.toString)
           val t0 = System.nanoTime()
-          val n = graft.wcoj.WcojJoin.leapfrogCatalyst(spark, rels(),
+          val n = graft.wcoj.WcojJoin.leapfrogHyperCube(spark, rels(),
             Seq("a", "b", "c", "d")).count()
           val cells = spark.conf.get("graft.wcoj.lastCells", "?")
           spark.conf.unset("graft.wcoj.singleCellMaxBindings")

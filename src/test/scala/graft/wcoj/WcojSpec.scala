@@ -170,12 +170,10 @@ class SkewStatsSpec extends SparkSpec {
       Array(if (i % 2 == 0) 42L else i.toLong, i.toLong)
     }
     val rdd = spark.sparkContext.parallelize(rows, 4)
-    val st = SkewStats.relStat(Array("x", "y"), rdd, skewAware = true)
+    val st = SkewStats.relStats(Seq((Array("x", "y"), rdd))).head
     assert(st.rows === 4000L)
     assert(st.heavyFrac("x") > 0.3) // true fraction 0.5, MG lower bound
     assert(st.heavyFrac("y") < 0.05)
-    val off = SkewStats.relStat(Array("x", "y"), rdd, skewAware = false)
-    assert(off.heavyFrac.isEmpty && off.rows === 4000L)
   }
 
   test("relStats (one combined job) == per-relation relStat for every relation") {
@@ -185,23 +183,21 @@ class SkewStatsSpec extends SparkSpec {
     val r2 = sc.parallelize((1 to 500).map(i => Array(i.toLong)), 2)
     val r3 = sc.parallelize(Seq.empty[Array[Long]], 1) // empty relation
     val preps = Seq((Array("x", "y"), r1), (Array("z"), r2), (Array("w"), r3))
-    for (aware <- Seq(true, false)) {
-      val combined = SkewStats.relStats(preps, aware)
-      val single = preps.map { case (a, r) => SkewStats.relStat(a, r, aware) }
-      combined.zip(single).foreach { case (c, s) =>
-        assert(c.attrs === s.attrs)
-        assert(c.rows === s.rows)
-        assert(c.bytes === s.bytes)
-        // sketches are merge-order dependent; both are valid MG lower
-        // bounds — assert the combined one keeps the guarantee instead
-        // of bitwise equality
-        if (aware && c.rows > 0) c.heavyFrac.foreach { case (k, f) =>
-          assert(f >= 0.0 && f <= 1.0, s"$k frac $f")
-        }
+    val combined = SkewStats.relStats(preps)
+    val single = preps.map(p => SkewStats.relStats(Seq(p)).head)
+    combined.zip(single).foreach { case (c, s) =>
+      assert(c.attrs === s.attrs)
+      assert(c.rows === s.rows)
+      assert(c.bytes === s.bytes)
+      // sketches are merge-order dependent; both are valid MG lower
+      // bounds — assert the combined one keeps the guarantee instead
+      // of bitwise equality
+      if (c.rows > 0) c.heavyFrac.foreach { case (k, f) =>
+        assert(f >= 0.0 && f <= 1.0, s"$k frac $f")
       }
-      // the skewed column still reads as skewed through the combined pass
-      if (aware) assert(combined.head.heavyFrac("x") > 0.3)
     }
+    // the skewed column still reads as skewed through the combined pass
+    assert(combined.head.heavyFrac("x") > 0.3)
   }
 
   test("degreeBound is a true output cap and exact on hand-built shapes") {
@@ -251,7 +247,7 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def countRows(): Long =
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count()
+      WcojJoin.leapfrogHyperCube(spark, rels(), Seq("a", "b", "c")).count()
     try {
       spark.conf.set("graft.wcoj.singleCellMaxBindings", "1000")
       val viaGrid = countRows()
@@ -278,7 +274,7 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("a"), col("dst").as("b")), Seq("a", "b")),
       (edges.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
-    def run(): Long = WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c")).count()
+    def run(): Long = WcojJoin.leapfrogHyperCube(spark, rels(), Seq("a", "b", "c")).count()
     try {
       run(): Unit // defaults: byte gate passes, bound computed
       assert(spark.conf.getOption("graft.wcoj.lastOutputBound").isDefined)
@@ -306,7 +302,7 @@ class SkewStatsSpec extends SparkSpec {
       (edges.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     try {
       spark.conf.set("graft.wcoj.singleCellMaxBindings", "5000")
-      WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c")).count(): Unit
+      WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c")).count(): Unit
       assert(spark.conf.get("graft.wcoj.lastCells").toInt === 1,
         "degree bound (n) is under budget — the collapse must still fire")
       assert(spark.conf.get("graft.wcoj.lastOutputBound").toLong <= 5000L)
@@ -323,7 +319,7 @@ class SkewStatsSpec extends SparkSpec {
       (e.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c")),
       (e.select(col("src").as("c"), col("dst").as("a")), Seq("c", "a")))
     def rows(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrogCatalyst(spark, rels(), Seq("a", "b", "c"))
+      WcojJoin.leapfrogHyperCube(spark, rels(), Seq("a", "b", "c"))
         .as[(Long, Long, Long)].collect().toSet
     val viaSingleCell = rows() // tiny input → default 4 MB threshold fires
     spark.conf.set("graft.wcoj.singleCellBytes", "0") // force the grid
@@ -348,11 +344,11 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
-    val viaWcoj = WcojJoin.leapfrog(spark, Seq(
+    val viaWcoj = WcojJoin.leapfrogHyperCube(spark, Seq(
         (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
         (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
         (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
-      Seq("a", "b", "c"), numPartitions = 4)
+      Seq("a", "b", "c"), maxCells = 4)
       .as[(Long, Long, Long)].collect().toSet
 
     assert(viaWcoj === viaDf)
@@ -369,7 +365,7 @@ class WcojJoinSpec extends SparkSpec {
       .toDF("b", "c")
     val viaDf = l.join(r, "b" :: Nil).select("a", "b", "c")
       .collect().map(x => (x.get(0), x.get(1), x.get(2))).toSet
-    val viaWcoj = WcojJoin.leapfrogCatalyst(spark, Seq(
+    val viaWcoj = WcojJoin.leapfrogHyperCube(spark, Seq(
         (l, Seq("a", "b")), (r, Seq("b", "c"))), Seq("a", "b", "c"))
       .collect().map(x => (x.get(0), x.get(1), x.get(2))).toSet
     // natural inner join: rows with NULL a or c never appear
@@ -377,84 +373,59 @@ class WcojJoinSpec extends SparkSpec {
     assert(viaWcoj.exists(_._1 == 0L)) // the genuine-0 rows DO join
   }
 
-  test("oversized broadcast complement auto-routes to the hypercube path") {
-    // the (b, c) relation lacks the leading attribute a, so the broadcast
-    // path would driver-collect it — with a budget below its size, leapfrog
-    // must take the no-broadcast HyperCube route and agree exactly
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(350)((rnd.nextInt(35).toLong, rnd.nextInt(35).toLong))
+  test("celebrity-lead triangle and no-complement star equal DataFrame joins") {
+    // a hot leading value: ~85% of edges start at vertex 0. The forced
+    // grid (no single-cell collapse) must spread the hot value across the
+    // other attributes' share dimensions and still agree exactly.
+    val rnd = new scala.util.Random(13)
+    val hot = Seq.fill(300)((0L, 1L + rnd.nextInt(40).toLong))
+    val cold = Seq.fill(60)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
+    val tri = (hot ++ cold).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
+    // every relation carries the hot lead `a`: a 2-relation star
+    val rnd2 = new scala.util.Random(17)
+    val hot2 = Seq.fill(400)((0L, 1L + rnd2.nextInt(300).toLong))
+    val cold2 = Seq.fill(80)((1L + rnd2.nextInt(40).toLong, 1L + rnd2.nextInt(40).toLong))
+    val star = (hot2 ++ cold2).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
+
+    val triDf = tri.select($"src".as("a"), $"dst".as("b"))
+      .join(tri.select($"src".as("b"), $"dst".as("c")), "b" :: Nil)
+      .join(tri.select($"dst".as("a"), $"src".as("c")), Seq("c", "a"))
+      .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
+    val starDf = star.select($"src".as("a"), $"dst".as("b"))
+      .join(star.select($"src".as("a"), $"dst".as("c")), "a" :: Nil)
+      .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
+    spark.conf.set("graft.wcoj.singleCellBytes", "0")
+    try {
+      val triCube = WcojJoin.leapfrogHyperCube(spark, Seq(
+          (tri.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
+          (tri.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
+          (tri.select($"dst".as("a"), $"src".as("c")), Seq("a", "c"))),
+        Seq("a", "b", "c")).as[(Long, Long, Long)].collect().toSet
+      val starCube = WcojJoin.leapfrogHyperCube(spark, Seq(
+          (star.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
+          (star.select($"src".as("a"), $"dst".as("c")), Seq("a", "c"))),
+        Seq("a", "b", "c")).as[(Long, Long, Long)].collect().toSet
+      assert(triCube === triDf)
+      assert(starCube === starDf)
+      assert(triDf.nonEmpty && starDf.nonEmpty)
+    } finally spark.conf.unset("graft.wcoj.singleCellBytes")
+  }
+
+  test("leapfrogHyperCube plans LeapFrogJoin; an explicit maxCells caps the grid") {
+    val rnd = new scala.util.Random(21)
+    val edges = Seq.fill(3000)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .distinct.filter(e => e._1 != e._2).toDF("src", "dst")
     val rels = Seq(
       (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
       (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
       (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
+    // a cell budget this small would grow the grid far past 6 cells
+    spark.conf.set("graft.wcoj.cellBudgetBytes", "16384")
     try {
-      spark.conf.set("graft.wcoj.broadcastBudgetBytes", "1")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.broadcastBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.broadcastBudgetBytes")
-  }
-
-  test("celebrity leading vertex trips the skew guard onto the hypercube path") {
-    // a hot leading value: ~85% of edges start at vertex 0, so hashing on
-    // the first attribute alone would serialize that value's whole
-    // enumeration into one task. With a cell budget below the hot slice's
-    // payload the guard must reroute the join to the hypercube grid and
-    // agree exactly with the unguarded broadcast route.
-    val rnd = new scala.util.Random(13)
-    val hot = Seq.fill(300)((0L, 1L + rnd.nextInt(40).toLong))
-    val cold = Seq.fill(60)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
-    val edges = (hot ++ cold).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
-    val rels = Seq(
-      (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
-      (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
-      (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
-    try {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", "64")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
-    } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
-  }
-
-  test("skew guard also covers the NO-complement shape (every relation carries the lead)") {
-    // a 2-relation star on `a`: both relations carry the leading attribute,
-    // so the broadcast-budget check never runs — the skew guard is the only
-    // thing standing between a celebrity lead value and a one-task join.
-    val rnd = new scala.util.Random(17)
-    val hot = Seq.fill(400)((0L, 1L + rnd.nextInt(300).toLong))
-    val cold = Seq.fill(80)((1L + rnd.nextInt(40).toLong, 1L + rnd.nextInt(40).toLong))
-    val edges = (hot ++ cold).distinct.filter(e => e._1 != e._2).toDF("src", "dst")
-    val rels = Seq(
-      (edges.select($"src".as("a"), $"dst".as("b")), Seq("a", "b")),
-      (edges.select($"src".as("a"), $"dst".as("c")), Seq("a", "c")))
-    def run(): Set[(Long, Long, Long)] =
-      WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c"), numPartitions = 4)
-        .as[(Long, Long, Long)].collect().toSet
-    try {
-      spark.conf.set("graft.wcoj.cellBudgetBytes", "64")
-      val viaCube = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "hypercube")
-      spark.conf.set("graft.wcoj.cellBudgetBytes", (64L << 20).toString)
-      val viaBroadcast = run()
-      assert(spark.conf.get("graft.wcoj.lastRoute") === "broadcast")
-      assert(viaCube === viaBroadcast)
-      assert(viaCube.nonEmpty)
+      val cube = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c"), maxCells = 6)
+      assert(cube.queryExecution.executedPlan.toString.contains("LeapFrogJoin"))
+      val cells = cube.rdd.getNumPartitions
+      assert(cells > 1 && cells <= 6, s"$cells cells")
     } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
   }
 
@@ -565,7 +536,7 @@ class WcojJoinSpec extends SparkSpec {
       (edges.select($"src".as("b"), $"dst".as("c")), Seq("b", "c")),
       (edges.select($"dst".as("a"), $"src".as("c")), Seq("a", "c")))
 
-    val viaCatalyst = WcojJoin.leapfrogCatalyst(spark, rels, Seq("a", "b", "c"))
+    val viaCatalyst = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c"))
     assert(viaCatalyst.queryExecution.executedPlan.toString.contains("LeapFrogJoin"))
 
     val viaDf = edges.select($"src".as("a"), $"dst".as("b"))
@@ -579,7 +550,7 @@ class WcojJoinSpec extends SparkSpec {
     assert(n >= 0)
   }
 
-  test("4-cycle through both RDD paths streams chunked (dense output, no blow-up)") {
+  test("4-cycle through leapfrogHyperCube streams chunked (dense output)") {
     // dense bipartite-ish graph: the 4-cycle output is much larger than any
     // input, exactly the shape that OOM'd a materialize-everything join
     val rnd = new scala.util.Random(7)
@@ -597,12 +568,9 @@ class WcojJoinSpec extends SparkSpec {
       .join(edges.select($"dst".as("a"), $"src".as("d")), Seq("d", "a"))
       .select("a", "b", "c", "d").as[(Long, Long, Long, Long)].collect().toSet
 
-    val viaLf = WcojJoin.leapfrog(spark, rels, Seq("a", "b", "c", "d"),
-      numPartitions = 4).as[(Long, Long, Long, Long)].collect().toSet
     val viaCube = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c", "d"),
       maxCells = 8).as[(Long, Long, Long, Long)].collect().toSet
 
-    assert(viaLf === viaDf)
     assert(viaCube === viaDf)
     assert(viaDf.size > 1000) // non-trivial output volume
   }
@@ -621,12 +589,18 @@ class WcojJoinSpec extends SparkSpec {
       .select("a", "b", "c").as[(Long, Long, Long)].collect().toSet
 
     spark.conf.set("graft.wcoj.cellBudgetBytes", "16384")
+    // the 3,000-edge input is under the single-cell threshold: pin it off
+    // so the grid sizing is what runs
+    spark.conf.set("graft.wcoj.singleCellBytes", "0")
     try {
       // maxCells = 0: floor is defaultParallelism, budget growth kicks in
       val cube = WcojJoin.leapfrogHyperCube(spark, rels, Seq("a", "b", "c"))
       assert(cube.rdd.getNumPartitions > spark.sparkContext.defaultParallelism)
       assert(cube.as[(Long, Long, Long)].collect().toSet === viaDf)
-    } finally spark.conf.unset("graft.wcoj.cellBudgetBytes")
+    } finally {
+      spark.conf.unset("graft.wcoj.cellBudgetBytes")
+      spark.conf.unset("graft.wcoj.singleCellBytes")
+    }
   }
 
   test("zipf skew: skew-aware shares cut the max routed cell payload") {
@@ -639,10 +613,10 @@ class WcojJoinSpec extends SparkSpec {
     val sRows = (1 to 5000).map(_ => Array(skewedB(), uni()))
     val tRows = (1 to 5000).map(_ => Array(uni(), uni()))
     val sc = spark.sparkContext
-    val stats = Seq(
-      SkewStats.relStat(Array("a", "b"), sc.parallelize(rRows, 4), skewAware = true),
-      SkewStats.relStat(Array("b", "c"), sc.parallelize(sRows, 4), skewAware = true),
-      SkewStats.relStat(Array("a", "c"), sc.parallelize(tRows, 4), skewAware = true))
+    val stats = SkewStats.relStats(Seq(
+      (Array("a", "b"), sc.parallelize(rRows, 4)),
+      (Array("b", "c"), sc.parallelize(sRows, 4)),
+      (Array("a", "c"), sc.parallelize(tRows, 4))))
 
     val attrs = Seq("a", "b", "c")
     val aware = HyperCube.optimalSharesStat(attrs, stats, 64).shares
